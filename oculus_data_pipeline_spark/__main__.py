@@ -20,12 +20,21 @@ reference's trade-off between run_pipeline.py and stage-by-stage runs.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 from .operators.classify import (
     EchoClassifier,
     MockReplayClassifier,
     OpenAIBatchClassifier,
+)
+
+# (stage, output subdirectory of OUT_DIR) in the order ``all`` runs them
+ALL_STAGES = (
+    ("ingest", "documents"),
+    ("classify", "classified"),
+    ("uri", "with_uris"),
+    ("graph", "graph"),
 )
 
 
@@ -80,37 +89,30 @@ def main(argv: list[str] | None = None) -> int:
     def read_enriched(path: str):
         return spark.read.schema(stages.ENRICHED_DOCUMENT_SCHEMA).json(path)
 
-    if args.stage == "ingest":
-        stages.ingest_stage(spark, args.src).write.mode("overwrite").json(args.out)
-    elif args.stage == "classify":
-        docs = read_documents_json(spark, args.src)
-        stages.classify_stage(docs, _make_classifier(args)).write.mode(
-            "overwrite"
-        ).json(args.out)
-    elif args.stage == "uri":
-        stages.uri_stage(read_enriched(args.src)).write.mode("overwrite").json(
-            args.out
-        )
-    elif args.stage == "graph":
-        nodes, edges = stages.graph_stage(read_enriched(args.src))
-        write_graph_parquet(nodes, edges, args.out)
-    elif args.stage == "all":
-        import os
+    def run(stage: str, src: str, out: str) -> None:
+        if stage == "ingest":
+            stages.ingest_stage(spark, src).write.mode("overwrite").json(out)
+        elif stage == "classify":
+            docs = read_documents_json(spark, src)
+            stages.classify_stage(docs, _make_classifier(args)).write.mode(
+                "overwrite"
+            ).json(out)
+        elif stage == "uri":
+            stages.uri_stage(read_enriched(src)).write.mode("overwrite").json(out)
+        elif stage == "graph":
+            nodes, edges = stages.graph_stage(read_enriched(src))
+            write_graph_parquet(nodes, edges, out)
 
-        docs_dir = os.path.join(args.out, "documents")
-        enriched_dir = os.path.join(args.out, "classified")
-        uri_dir = os.path.join(args.out, "with_uris")
-        graph_dir = os.path.join(args.out, "graph")
-        stages.ingest_stage(spark, args.src).write.mode("overwrite").json(docs_dir)
-        docs = read_documents_json(spark, docs_dir)
-        stages.classify_stage(docs, _make_classifier(args)).write.mode(
-            "overwrite"
-        ).json(enriched_dir)
-        stages.uri_stage(read_enriched(enriched_dir)).write.mode("overwrite").json(
-            uri_dir
-        )
-        nodes, edges = stages.graph_stage(read_enriched(uri_dir))
-        write_graph_parquet(nodes, edges, graph_dir)
+    if args.stage == "all":
+        # the four stages in order, each reading the previous one's
+        # output directory under OUT_DIR
+        src = args.src
+        for stage, subdir in ALL_STAGES:
+            out = os.path.join(args.out, subdir)
+            run(stage, src, out)
+            src = out
+    else:
+        run(args.stage, args.src, args.out)
     print(f"stage {args.stage} complete → {args.out}")
     return 0
 

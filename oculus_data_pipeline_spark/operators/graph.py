@@ -22,24 +22,18 @@ from pyspark.sql import functions as F
 
 from ..functions.text import generate_uri
 
-LABEL_FOR = {
-    "person": "Person",
-    "place": "Place",
-    "organization": "Organization",
-    "term": "Term",
-}
-
 # The reference's type dispatch (json_to_db.py:104-119) is an
 # if/elif over person/place/organization with an unconditional
 # ``else`` that files the entity as a plain index term — so NULL and
 # unknown labels are INDEX TERMS there, never a typed entity. The
 # classify operator coalesces its output onto the four known labels,
-# but callers feeding build_nodes/build_edges directly (the bypass
-# path) used to leak NULL labels through ``label == 'term'``
-# three-valued logic: NULL rel_type edges pointing entity→doc with a
-# term-text key (r9 review triage, fixed r10). canonical_label pins
-# the reference policy AT this boundary: anything outside the three
-# typed labels — 'term', an unknown string, or NULL — is 'term'.
+# but callers feeding the builders directly (the bypass path) can
+# carry NULL or unknown labels; canonical_label pins the reference
+# policy AT this boundary: anything outside the three typed labels —
+# 'term', an unknown string, or NULL — is 'term'. Every graph builder
+# (build_nodes/build_edges here, build_document_graph in plans) goes
+# through entity_node/entity_edge below, the one place that decides
+# node label, key and edge direction.
 TYPED_LABELS = ("person", "place", "organization")
 
 
@@ -53,22 +47,43 @@ def canonical_label(label_col: F.Column) -> F.Column:
     )
 
 
-def _node_label(label_col: F.Column) -> F.Column:
-    lab = canonical_label(label_col)
-    out = F.lit("Term")
-    for raw, node in LABEL_FOR.items():
-        out = F.when(lab == raw, F.lit(node)).otherwise(out)
-    return out
-
-
-def entity_key(term_col, label_col) -> F.Column:
+def entity_key(term_col, label_col, uri_col=None) -> F.Column:
     """Entity surrogate key: reference URIs for the typed entities
     (generate_uri.py:43-45), the term text itself for plain terms
     (which get no URI in the reference). NULL/unknown labels are
-    plain terms (see canonical_label)."""
-    return F.when(
-        canonical_label(label_col) != "term", generate_uri(term_col)
-    ).otherwise(term_col)
+    plain terms (see canonical_label). A stored ``uri_col`` (the
+    staged JSON's) wins where it is set; on the engine's own output it
+    equals the derived uri, since generate_uri is deterministic."""
+    uri = generate_uri(term_col)
+    if uri_col is not None:
+        uri = F.coalesce(uri_col, uri)
+    return F.when(canonical_label(label_col) == "term", term_col).otherwise(uri)
+
+
+def entity_node(term_col, label_col, uri_col=None) -> list[F.Column]:
+    """``(label, key, name)`` node columns for a classified entity:
+    Person/Place/Organization/Term (json_to_db.py:7-44)."""
+    return [
+        F.initcap(canonical_label(label_col)).alias("label"),
+        entity_key(term_col, label_col, uri_col).alias("key"),
+        term_col.alias("name"),
+    ]
+
+
+def entity_edge(doc_col, term_col, label_col, uri_col=None) -> list[F.Column]:
+    """``(src, dst, rel_type)`` edge columns with reference directions
+    (json_to_db.py): typed entities point AT the document —
+    (e)-[:HAS_PERSON|HAS_PLACE|HAS_ORGANIZATION]->(d) via
+    create_relationship (:46-52) — while plain terms hang off it —
+    (d)-[:HAS_TERM]->(t) via relate_index_term (:54-60)."""
+    canon = canonical_label(label_col)
+    key = entity_key(term_col, label_col, uri_col)
+    is_term = canon == "term"
+    return [
+        F.when(is_term, doc_col).otherwise(key).alias("src"),
+        F.when(is_term, key).otherwise(doc_col).alias("dst"),
+        F.concat(F.lit("HAS_"), F.upper(canon)).alias("rel_type"),
+    ]
 
 
 def build_nodes(doc_ids: DataFrame, classified_terms: DataFrame) -> DataFrame:
@@ -92,22 +107,17 @@ def build_nodes(doc_ids: DataFrame, classified_terms: DataFrame) -> DataFrame:
         name_col.alias("name"),
     )
     entity_nodes = classified_terms.select(
-        _node_label(F.col("label")).alias("label"),
-        entity_key(F.col("norm_term"), F.col("label")).alias("key"),
-        F.col("norm_term").alias("name"),
+        *entity_node(F.col("norm_term"), F.col("label"))
     )
     # Full-row distinct here; the MERGE-idempotent sink dedups on
-    # (label, key) at write time (write_graph). Keeping all 3 columns
-    # makes the result deterministic under URI hash collisions.
+    # (label, key) at write time. Keeping all 3 columns makes the
+    # result deterministic under URI hash collisions.
     return doc_nodes.unionByName(entity_nodes).distinct()
 
 
 def build_edges(classified_terms: DataFrame, dedup: bool = True) -> DataFrame:
-    """``edges(src, dst, rel_type)`` with reference directions
-    (json_to_db.py): typed entities point AT the document —
-    (e)-[:HAS_PERSON|HAS_PLACE|HAS_ORGANIZATION]->(d) via
-    create_relationship (:46-52) — while plain terms hang off it —
-    (d)-[:HAS_TERM]->(t) via relate_index_term (:54-60).
+    """``edges(src, dst, rel_type)`` from classified terms
+    (doc_id, norm_term, label), directed as in entity_edge.
 
     ``dedup=False`` skips the final distinct — a whole shuffle stage of
     the full edge set. Safe whenever ``classified_terms`` is already
@@ -116,22 +126,9 @@ def build_edges(classified_terms: DataFrame, dedup: bool = True) -> DataFrame:
     still guaranteed by the sink's (src, dst, rel_type) dedup at write
     time — the same division of labor build_nodes documents for
     (label, key)."""
-    lab = canonical_label(F.col("label"))
-    ekey = entity_key(F.col("norm_term"), F.col("label"))
-    doc = F.col("doc_id").cast("string")
-    is_term = lab == "term"
     edges = classified_terms.select(
-        F.when(is_term, doc).otherwise(ekey).alias("src"),
-        F.when(is_term, ekey).otherwise(doc).alias("dst"),
-        F.concat(F.lit("HAS_"), F.upper(lab)).alias("rel_type"),
+        *entity_edge(
+            F.col("doc_id").cast("string"), F.col("norm_term"), F.col("label")
+        )
     )
     return edges.distinct() if dedup else edges
-
-
-def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
-    """Default sink: parquet tables (correctness never depends on an
-    external DB). See sinks/graph_sink.py for the Neo4j connector
-    variant over the same two DataFrames."""
-    from ..sinks.graph_sink import write_graph_parquet
-
-    write_graph_parquet(nodes, edges, out_dir)

@@ -1292,29 +1292,6 @@ def _train_pq_lists(
     return steps
 
 
-def train_pq_codebook(
-    resid: DataFrame,
-    k: int,
-    n_subspaces: int,
-    sub: int,
-    k_coarse: int,
-    n_steps: int,
-    off: int = TRAIN_OFFSET,
-) -> list[DataFrame]:
-    """Lloyd-train the residual PQ codebook on integer residuals
-    ``resid(id, list_id, r)``; returns the codebook table
-    (m, code, cvec) AFTER each step, index 0 = the next-k-ids init —
-    literal local relations, value-identical to the former checkpoint
-    chain (see :func:`_train_pq_lists`)."""
-    spark = resid.sparkSession
-    return [
-        spark.createDataFrame(step, "m long, code long, cvec array<long>")
-        for step in _train_pq_lists(
-            resid, k, n_subspaces, sub, k_coarse, n_steps, off
-        )
-    ]
-
-
 def _int_corpus(
     emb: DataFrame, id_col: str, vec_col: str, scale: int
 ) -> DataFrame:
@@ -1324,24 +1301,6 @@ def _int_corpus(
             F.col(vec_col).cast("array<double>"),
             lambda x: F.round(x * scale).cast("long"),
         ).alias("xs"),
-    )
-
-
-def _residuals(e: DataFrame, crow: DataFrame, k_coarse: int) -> DataFrame:
-    """(id, list_id, r) — integer residuals vs the trained coarse
-    quantizer; a scan-speed projection against ONE broadcast row."""
-    return (
-        e.crossJoin(F.broadcast(crow))
-        .withColumn("list_id", F.array_min(_coarse_cands(k_coarse)).cid)
-        .select(
-            "id",
-            "list_id",
-            F.zip_with(
-                "xs",
-                F.element_at(F.col("ccs"), (F.col("list_id") + 1).cast("int")),
-                lambda x, c: x - c,
-            ).alias("r"),
-        )
     )
 
 

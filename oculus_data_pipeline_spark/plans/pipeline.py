@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 
 from ..functions.text import generate_uri, normalize_term, strip_parenthetical, with_converted_name
 from ..operators.classify import Classifier, classify_terms
+from ..operators.graph import canonical_label, entity_edge, entity_node
 
 # Explicit schema (SURVEY.md §1.4): inference would collapse
 # single-element arrays to scalars and parse dates; the reference keeps
@@ -109,19 +110,18 @@ DOCUMENT_XML_SCHEMA = T.StructType(
 )
 
 
-def read_documents_xml(spark: SparkSession, path: str) -> DataFrame:
-    """S1/S2: native XML scan (xml_to_json.py:47-103 / run_pipeline.py:
-    97-102). At scale: splittable scan, column pruning into the parser.
+def xml_document_reader(reader, schema: T.StructType = DOCUMENT_XML_SCHEMA):
+    """A batch or streaming XML reader set up for the reference's
+    ``<document>`` rows under an explicit schema."""
+    return reader.format("xml").option("rowTag", "document").schema(schema)
 
-    Normalizes to the canonical nested shape (xml_to_json.py:77-96):
-    flat scalars + arrays-of-strings + indexing array of term structs.
-    """
-    raw = (
-        spark.read.format("xml")
-        .option("rowTag", "document")
-        .schema(DOCUMENT_XML_SCHEMA)
-        .load(path)
-    )
+
+def canonical_documents(raw: DataFrame) -> DataFrame:
+    """Normalizes parsed XML (DOCUMENT_XML_SCHEMA columns) to the
+    canonical nested shape (xml_to_json.py:77-96): flat scalars +
+    arrays-of-strings + indexing array of term structs. Every XML
+    ingest path — batch, quarantining, streaming and the Python data
+    source — ends in this projection."""
     return raw.select(
         F.col("documentID").alias("doc_id"),
         F.col("documentTitle").alias("title"),
@@ -142,6 +142,12 @@ def read_documents_xml(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def read_documents_xml(spark: SparkSession, path: str) -> DataFrame:
+    """S1/S2: native XML scan (xml_to_json.py:47-103 / run_pipeline.py:
+    97-102). At scale: splittable scan, column pruning into the parser."""
+    return canonical_documents(xml_document_reader(spark.read).load(path))
+
+
 def read_documents_xml_with_quarantine(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -157,11 +163,9 @@ def read_documents_xml_with_quarantine(
         [*DOCUMENT_XML_SCHEMA.fields, T.StructField("_corrupt_record", T.StringType())]
     )
     raw = (
-        spark.read.format("xml")
-        .option("rowTag", "document")
+        xml_document_reader(spark.read, schema_with_corrupt)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(schema_with_corrupt)
         .load(path)
         # input_file_name() is only defined while the scan is live —
         # capture it before the cache boundary or it comes back ''
@@ -171,27 +175,7 @@ def read_documents_xml_with_quarantine(
         F.col("_corrupt_record").alias("raw_payload"),
         F.col("__source_file").alias("source_file"),
     )
-    good = raw.where(F.col("_corrupt_record").isNull()).drop(
-        "_corrupt_record", "__source_file"
-    )
-    docs = good.select(
-        F.col("documentID").alias("doc_id"),
-        F.col("documentTitle").alias("title"),
-        F.struct(
-            F.col("projectInfo.publicationName").alias("publication_name"),
-            F.col("projectInfo.seriesName").alias("series_name"),
-            F.col("projectInfo.volumeInfo").alias("volume_info"),
-            F.col("projectInfo.publisher").alias("publisher"),
-            F.coalesce(F.col("projectInfo.formats.type"), F.array()).alias("formats"),
-        ).alias("project_info"),
-        F.coalesce(F.col("authors.author"), F.array()).alias("authors"),
-        F.coalesce(F.col("recipients.recipient"), F.array()).alias("recipients"),
-        F.col("dates.`date-from`").alias("date_from"),
-        F.col("dates.`date-to`").alias("date_to"),
-        F.col("location.placeName").alias("location_name"),
-        F.coalesce(F.col("repositories.repository"), F.array()).alias("repositories"),
-        F.coalesce(F.col("indexing.indexTerm"), F.array()).alias("indexing"),
-    )
+    docs = canonical_documents(raw.where(F.col("_corrupt_record").isNull()))
     return docs, bad
 
 
@@ -311,17 +295,16 @@ def classify_document_terms(
         )
     )
     def term_obj(obj_col: str, raw_col: str):
-        # empty part → {term: '', type: 'term'} placeholder; NULL obj
-        # only happens for empty raws (filtered above)
+        # empty part → NULL object (empty raws never reached the
+        # classifier, see the filter above). The uri stays unset: the
+        # uri stage fills it for the staged JSON, and the graph builder
+        # derives entity keys itself (operators/graph.py entity_key).
         return F.when(
             F.length(raw_col) > 0,
             F.struct(
                 F.col(f"{obj_col}.term").alias("term"),
                 F.col(f"{obj_col}.type").alias("type"),
-                F.when(
-                    F.col(f"{obj_col}.type") != "term",
-                    generate_uri(F.col(f"{obj_col}.term")),
-                ).alias("uri"),
+                F.lit(None).cast("string").alias("uri"),
             ),
         )
 
@@ -334,17 +317,26 @@ def classify_document_terms(
     )
 
 
-def build_document_graph(
-    docs: DataFrame, classified: DataFrame, typed_parent_sub_edges: bool = False
-):
+def classify_documents(docs: DataFrame, classifier: Classifier) -> DataFrame:
+    """The classify body every entry point shares (fused, staged and
+    per micro-batch): term triples of ``docs`` labelled with the
+    known entities of the same ``docs`` taking precedence. Returns
+    (doc_id, pos, main, midsub, sub) term objects {term, type, uri}
+    with ``uri`` unset."""
+    return classify_document_terms(
+        extract_terms(docs), known_entities_from_docs(docs), classifier
+    )
+
+
+def build_document_graph(docs: DataFrame, classified: DataFrame):
     """K5/K6/K7: nodes + edges DataFrames (json_to_db.py:78-127
     re-expressed set-wise; ~13 serial txns/doc → 2 bulk writes).
 
     nodes(label, key, name); edges(src, dst, rel_type) where Document
     src/dst keys are doc ids and entity keys are URIs / term text.
 
-    Entity dispatch is NULL-safe via the same canonical-label policy as
-    operators/graph.py (r10): any type outside person/place/organization
+    Index terms go through the one entity dispatch, operators/graph.py
+    entity_node/entity_edge: any type outside person/place/organization
     — including NULL and unknown strings — is the reference else-branch
     plain index term (json_to_db.py:118-119), keyed by TERM TEXT with a
     (d)-[:HAS_TERM]->(t) edge, even when the staged JSON carries a
@@ -353,7 +345,7 @@ def build_document_graph(
     by term text alone, json_to_db.py:34-38,54-60 — the stored uri is
     dead weight there).
 
-    Reference quirk, reproduced bug-for-bug (default): relate_sub_term
+    Reference quirk, reproduced bug-for-bug: relate_sub_term
     (json_to_db.py:63-69) MATCHes the parent as
     ``(p:<ParentType> {term: $parent_term})``, but typed nodes are
     MERGEd with only ``name``/``uri`` properties (create_person/place/
@@ -361,11 +353,7 @@ def build_document_graph(
     parent, so the Cypher MERGEs after it never run: midsub/sub EDGES
     exist only under Term parents. The sub term NODES always exist (the
     separate create_term call at :122,:126 runs unconditionally).
-    ``typed_parent_sub_edges=True`` restores the evident intent
-    (parent_type is threaded through deliberately) and emits MIDSUB/SUB
-    edges under typed parents too, sourced at the parent's uri key.
     """
-    from ..operators.graph import canonical_label
     doc_nodes = docs.select(
         F.lit("Document").alias("label"),
         F.col("doc_id").alias("key"),
@@ -424,38 +412,11 @@ def build_document_graph(
         F.col("doc_id").alias("src"), F.col("date").alias("dst"), F.col("rel").alias("rel_type")
     )
 
-    def entity_cols(obj):
-        canon = canonical_label(obj["type"])
-        label = (
-            F.when(canon == "person", "Person")
-            .when(canon == "place", "Place")
-            .when(canon == "organization", "Organization")
-            .otherwise("Term")
-        )
-        # else-branch (canonical 'term', incl. NULL/unknown types) is
-        # keyed by TERM TEXT even when a stored uri exists; typed
-        # entities by their uri, re-derived when the staged JSON lacks
-        # one (generate_uri is deterministic, so coalesce == stored)
-        key = F.when(canon == "term", obj["term"]).otherwise(
-            F.coalesce(obj["uri"], generate_uri(obj["term"]))
-        )
-        return canon, label, key
-
-    main_c, main_l, main_k = entity_cols(F.col("main"))
-    term_nodes = classified.where(F.col("main").isNotNull()).select(
-        main_l.alias("label"), main_k.alias("key"), F.col("main.term").alias("name")
-    )
-    # Edge direction per json_to_db.py: typed entities use
-    # create_relationship (:46-52) — (e)-[:HAS_*]->(d), entity →
-    # document; plain terms use relate_index_term (:54-60) —
-    # (d)-[:HAS_TERM]->(t), document → term. Dispatch on the CANONICAL
-    # label so NULL/unknown types take the else branch (HAS_TERM,
-    # doc → term) instead of a NULL rel_type entity→doc edge.
-    main_is_term = main_c == "term"
-    term_edges = classified.where(F.col("main").isNotNull()).select(
-        F.when(main_is_term, F.col("doc_id")).otherwise(main_k).alias("src"),
-        F.when(main_is_term, main_k).otherwise(F.col("doc_id")).alias("dst"),
-        F.concat(F.lit("HAS_"), F.upper(main_c)).alias("rel_type"),
+    main = F.col("main")
+    has_main = classified.where(main.isNotNull())
+    term_nodes = has_main.select(*entity_node(main["term"], main["type"], main["uri"]))
+    term_edges = has_main.select(
+        *entity_edge(F.col("doc_id"), main["term"], main["type"], main["uri"])
     )
 
     # relate_sub_term (json_to_db.py:63-69, :121-127): sub term NODES
@@ -463,24 +424,21 @@ def build_document_graph(
     # MIDSUB/SUB EDGES only materialize under Term parents — see the
     # quirk note in the docstring. Both edges hang off the MAIN term
     # (relate_sub_term gets term['term'] as the parent for midsub and
-    # sub alike), matched by term text for Term parents.
-    sub_parent_ok = (
-        F.lit(True) if typed_parent_sub_edges else (main_c == "term")
-    )
+    # sub alike), matched by term text: a Term parent's key.
+    term_parent = has_main.where(canonical_label(main["type"]) == "term")
     sub_nodes = []
     sub_edges = []
     for child in ("midsub", "sub"):
-        has_child = classified.where(F.col(child).isNotNull() & F.col("main").isNotNull())
         sub_nodes.append(
-            has_child.select(
+            has_main.where(F.col(child).isNotNull()).select(
                 F.lit("Term").alias("label"),
                 F.col(f"{child}.term").alias("key"),
                 F.col(f"{child}.term").alias("name"),
             )
         )
         sub_edges.append(
-            has_child.where(sub_parent_ok).select(
-                main_k.alias("src"),
+            term_parent.where(F.col(child).isNotNull()).select(
+                main["term"].alias("src"),
                 F.col(f"{child}.term").alias("dst"),
                 F.lit(child.upper()).alias("rel_type"),
             )
@@ -500,7 +458,4 @@ def run_pipeline(
 ) -> tuple[DataFrame, DataFrame]:
     """The whole reference pipeline, one lazy DAG: XML → graph tables."""
     docs = read_documents_xml(spark, xml_path)
-    terms = extract_terms(docs)
-    known = known_entities_from_docs(docs)
-    classified = classify_document_terms(terms, known, classifier)
-    return build_document_graph(docs, classified)
+    return build_document_graph(docs, classify_documents(docs, classifier))

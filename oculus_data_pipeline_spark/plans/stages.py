@@ -34,13 +34,7 @@ from pyspark.sql import types as T
 
 from ..functions.text import generate_uri
 from ..operators.classify import Classifier
-from .pipeline import (
-    build_document_graph,
-    classify_document_terms,
-    extract_terms,
-    known_entities_from_docs,
-    read_documents_xml,
-)
+from .pipeline import build_document_graph, classify_documents, read_documents_xml
 
 # The reference's updated-JSON document shape (json_classification.py
 # update_json output; generate_uri.py add_uri output).
@@ -123,20 +117,7 @@ def classify_stage(docs: DataFrame, classifier: Classifier) -> DataFrame:
     known-entity precedence and person-name conversion; author /
     recipient names are converted in place (update_json,
     json_classification.py:233-237)."""
-    terms = extract_terms(docs)
-    known = known_entities_from_docs(docs)
-    classified = classify_document_terms(terms, known, classifier)
-
-    def drop_uri(obj: Column) -> Column:
-        return F.when(
-            obj.isNotNull(),
-            F.struct(
-                obj["term"].alias("term"),
-                obj["type"].alias("type"),
-                F.lit(None).cast("string").alias("uri"),
-            ),
-        )
-
+    classified = classify_documents(docs, classifier)
     items = classified.groupBy("doc_id").agg(
         F.transform(
             F.array_sort(
@@ -146,9 +127,9 @@ def classify_stage(docs: DataFrame, classifier: Classifier) -> DataFrame:
                         F.struct(
                             F.col("main.term").alias("term"),
                             F.col("main.type").alias("type"),
-                            F.lit(None).cast("string").alias("uri"),
-                            drop_uri(F.col("midsub")).alias("midsub"),
-                            drop_uri(F.col("sub")).alias("sub"),
+                            F.col("main.uri").alias("uri"),
+                            F.col("midsub"),
+                            F.col("sub"),
                         ).alias("item"),
                     )
                 )

@@ -21,10 +21,10 @@ from pyspark.sql import functions as F
 # Organization → Document; relate_index_term :54-60 binds
 # (d:Document)-[:HAS_TERM]->(t:Term); date edges :84-92 bind
 # (d:Document)→(:Date)). MIDSUB/SUB (relate_sub_term :63-69) carry a
-# None source: the parent is a Term in the reference-faithful default
-# graph, but under build_document_graph(typed_parent_sub_edges=True)
-# it can be any typed entity, so the writer resolves those source
-# labels from the nodes table instead of guessing.
+# None source: build_document_graph only emits them under Term parents,
+# but a graph supplied from outside may hang them off any typed entity,
+# so the writer resolves those source labels from the nodes table
+# instead of guessing.
 REL_ENDPOINT_LABELS: dict[str, tuple[str | None, str]] = {
     "AUTHOR": ("Person", "Document"),
     "RECIPIENT": ("Person", "Document"),

@@ -120,6 +120,20 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
 
 
+def normalize_events(df: DataFrame) -> DataFrame:
+    """Session-time TIMESTAMP ``ts`` for the events table, read with
+    ``spark.sql.legacy.parquet.nanosAsLong`` set. events.ts has been
+    parquet TIMESTAMP(NANOS) in some driver generations, which Spark's
+    reader rejects: it arrives as nanos-as-long and is integer-divided
+    to micros (double division would lose precision at ~1.7e18 ns).
+    Works on batch and streaming DataFrames alike."""
+    from pyspark.sql import functions as F
+
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return _normalize_timestamps(df)
+
+
 # Analyzed-plan handles keyed by (application, file identity): a
 # DataFrame is an immutable lazy plan, so handing the same handle back
 # avoids re-listing the file and re-reading the parquet footer on
@@ -184,19 +198,10 @@ def _load_table_uncached(
     spark: SparkSession, sf_dir: str, name: str, path: str, fanout: bool = True
 ) -> DataFrame:
     if name == "events":
-        # events.ts has been parquet TIMESTAMP(NANOS) in some driver
-        # generations, which Spark's reader rejects. Read nanos as long,
-        # then integer-divide to micros (double division would lose
-        # precision at ~1.7e18 ns).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        from pyspark.sql import functions as F
-
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        df = normalize_events(spark.read.parquet(path))
     else:
-        df = spark.read.parquet(path)
-    df = _normalize_timestamps(df)
+        df = _normalize_timestamps(spark.read.parquet(path))
     return _fanout(spark, df, name, path) if fanout else df
 
 

@@ -11,75 +11,46 @@ distinct→anti-join→infer shape) is shared verbatim between modes.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators.classify import Classifier
 from ..plans.pipeline import (
-    DOCUMENT_XML_SCHEMA,
     build_document_graph,
-    classify_document_terms,
-    extract_terms,
-    known_entities_from_docs,
+    canonical_documents,
+    classify_documents,
+    xml_document_reader,
 )
+from ..sources.tables import normalize_events
 
-def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream of the events table.
 
-    The driver's parquet has shipped ``ts`` as either TIMESTAMP(NANOS)
-    (readable only as int64 via the nanosAsLong legacy flag) or plain
-    TIMESTAMP_NTZ micros, depending on generation. A streaming file
-    source needs an explicit schema, so probe the footer with a batch
-    read (metadata-only) and normalize either encoding to session-time
-    TIMESTAMP — same contract as sources/tables.load_table.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+def _parquet_file_stream(spark: SparkSession, path: str) -> DataFrame:
+    """One-file-per-trigger parquet stream over ``path`` (a directory,
+    or a file name / glob ending in ``.parquet``). A streaming file
+    source needs an explicit schema, so it is probed from the parquet
+    footer with a batch read (metadata-only)."""
     probe = spark.read.parquet(path)
-    ts_type = dict(probe.dtypes).get("ts")
     reader = spark.readStream.schema(probe.schema).option("maxFilesPerTrigger", 1)
     if path.endswith(".parquet"):
-        # file source wants a directory; select the one file via glob
-        import os
-
+        # file source wants a directory; select the file(s) via glob
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
-    df = reader.parquet(path)
-    if ts_type == "bigint":  # nanos-as-long → integer-divide to micros
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return reader.parquet(path)
+
+
+def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream of the events table, with ``ts`` normalized
+    to session-time TIMESTAMP from either parquet encoding — the same
+    contract as sources/tables.load_table."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return normalize_events(_parquet_file_stream(spark, path))
 
 
 def read_xml_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
     """Streaming XML document source over a landing directory —
     the reference's ingest loop as a stream."""
-    raw = (
-        spark.readStream.format("xml")
-        .option("rowTag", "document")
-        .schema(DOCUMENT_XML_SCHEMA)
-        .load(landing_dir)
-    )
-    # same canonicalization as the batch reader
-    return raw.select(
-        F.col("documentID").alias("doc_id"),
-        F.col("documentTitle").alias("title"),
-        F.struct(
-            F.col("projectInfo.publicationName").alias("publication_name"),
-            F.col("projectInfo.seriesName").alias("series_name"),
-            F.col("projectInfo.volumeInfo").alias("volume_info"),
-            F.col("projectInfo.publisher").alias("publisher"),
-            F.coalesce(F.col("projectInfo.formats.type"), F.array()).alias("formats"),
-        ).alias("project_info"),
-        F.coalesce(F.col("authors.author"), F.array()).alias("authors"),
-        F.coalesce(F.col("recipients.recipient"), F.array()).alias("recipients"),
-        F.col("dates.`date-from`").alias("date_from"),
-        F.col("dates.`date-to`").alias("date_to"),
-        F.col("location.placeName").alias("location_name"),
-        F.coalesce(F.col("repositories.repository"), F.array()).alias("repositories"),
-        F.coalesce(F.col("indexing.indexTerm"), F.array()).alias("indexing"),
-    )
+    return canonical_documents(xml_document_reader(spark.readStream).load(landing_dir))
 
 
 def stream_pipeline_to_graph(
@@ -92,13 +63,20 @@ def stream_pipeline_to_graph(
 ):
     """Continuous (or drain-once) XML→graph ingest.
 
-    foreachBatch reuses the exact batch pipeline per micro-batch and
-    appends to the graph parquet tables; MERGE-style idempotency —
-    including for a micro-batch retried after a partial write — comes
-    from downstream dedup at read/compaction time, on (label, key)
-    for nodes and (src, dst, rel_type) for edges, the same keys
-    write_graph_parquet dedups on (Delta MERGE INTO when a
-    transactional table format is available).
+    foreachBatch runs the batch pipeline's classify and graph bodies
+    per micro-batch and appends to the graph parquet tables;
+    MERGE-style idempotency — including for a micro-batch retried
+    after a partial write — comes from downstream dedup at
+    read/compaction time, on (label, key) for nodes and (src, dst,
+    rel_type) for edges, the same keys write_graph_parquet dedups on
+    (Delta MERGE INTO when a transactional table format is available).
+
+    The known-entity table (authors, recipients and places that take
+    precedence over the classifier) is built per micro-batch, from that
+    batch's documents only. An index term naming a person who is an
+    author or recipient only in another batch's files is therefore
+    sent to the classifier, so the streamed graph equals
+    ``run_pipeline``'s only when the stream drains in one micro-batch.
     """
     docs_stream = read_xml_stream(spark, landing_dir)
 
@@ -106,10 +84,7 @@ def stream_pipeline_to_graph(
         if not docs.head(1):
             return
         docs = docs.cache()
-        terms = extract_terms(docs)
-        known = known_entities_from_docs(docs)
-        classified = classify_document_terms(terms, known, classifier)
-        nodes, edges = build_document_graph(docs, classified)
+        nodes, edges = build_document_graph(docs, classify_documents(docs, classifier))
         nodes.write.mode("append").parquet(f"{out_dir}/nodes")
         edges.write.mode("append").parquet(f"{out_dir}/edges")
         docs.unpersist()
@@ -125,16 +100,8 @@ def stream_pipeline_to_graph(
 
 def read_documents_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream of the documents table (schema probed from
-    the parquet footer, same normalization contract as load_table).
-    Stateless curation operators (PII scrub, quality scoring, lang-id,
-    chunking) are narrow maps, so the SAME batch Column expressions
-    run unchanged on this stream — pinned by the batch/stream parity
-    tests."""
-    probe = spark.read.parquet(path)
-    reader = spark.readStream.schema(probe.schema).option("maxFilesPerTrigger", 1)
-    if path.endswith(".parquet"):
-        import os
-
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    return reader.parquet(path)
+    the parquet footer). Stateless curation operators (PII scrub,
+    quality scoring, lang-id, chunking) are narrow maps, so the SAME
+    batch Column expressions run unchanged on this stream — pinned by
+    the batch/stream parity tests."""
+    return _parquet_file_stream(spark, path)

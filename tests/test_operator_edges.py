@@ -561,8 +561,7 @@ def test_sub_edges_only_under_term_parents(spark):
     only name/uri (create_person/place/organization, :16-32) — the
     MATCH yields zero rows, so MIDSUB/SUB edges exist ONLY under Term
     parents; the sub term NODES always exist (create_term at :122,:126
-    runs unconditionally). Reproduced bug-for-bug by default;
-    typed_parent_sub_edges=True restores the evident intent."""
+    runs unconditionally). Reproduced bug-for-bug."""
     from oculus_data_pipeline_spark.plans.pipeline import build_document_graph
 
     docs, classified = _graph_fixture(
@@ -582,11 +581,6 @@ def test_sub_edges_only_under_term_parents(spark):
     assert ("Term", "letters") in node_set
     assert ("Term", "drafts") in node_set
     assert not [e for e in edge_set if e[2] in ("MIDSUB", "SUB") and e[0] == "r123"]
-    # opt-in intent semantics: edges under the typed parent's uri key
-    _, edges2 = build_document_graph(docs, classified, typed_parent_sub_edges=True)
-    edge_set2 = {(r["src"], r["dst"], r["rel_type"]) for r in edges2.collect()}
-    assert ("r123", "letters", "MIDSUB") in edge_set2
-    assert ("r123", "drafts", "SUB") in edge_set2
 
 
 def test_document_graph_null_unknown_types_are_index_terms(spark):

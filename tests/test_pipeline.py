@@ -173,6 +173,20 @@ def test_quarantine_isolates_corrupt_files(spark, tmp_path):
     assert bad_rows[0]["source_file"].endswith("bad.xml")
 
 
+def test_quarantine_documents_equal_plain_read(spark, xml_dir):
+    """On a well-formed corpus the quarantining reader's documents are
+    the plain XML reader's documents, row for row and in schema."""
+    from oculus_data_pipeline_spark.plans.pipeline import (
+        read_documents_xml_with_quarantine,
+    )
+
+    plain = read_documents_xml(spark, xml_dir)
+    docs, bad = read_documents_xml_with_quarantine(spark, xml_dir)
+    assert docs.schema == plain.schema
+    assert docs.orderBy("doc_id").collect() == plain.orderBy("doc_id").collect()
+    assert bad.count() == 0
+
+
 def test_compact_small_files(spark, tmp_path):
     import os
 

@@ -268,8 +268,8 @@ def test_relationship_groups_typed_parent_and_errors(spark):
         relationship_groups,
     )
 
-    # typed_parent_sub_edges=True graphs: a SUB edge sourced at a
-    # Person node's uri key resolves to a Person→Term group
+    # a graph supplied from outside: a SUB edge sourced at a Person
+    # node's uri key resolves to a Person→Term group
     nodes = spark.createDataFrame(
         [("Person", "r9", "George Washington"), ("Term", "army", "army")],
         ["label", "key", "name"],

@@ -105,18 +105,33 @@ def test_cli_all_smoke(spark, xml_dir, tmp_path):
     assert got_edges == exp_edges
 
 
+def test_cli_single_stages_match_all(spark, xml_dir, tmp_path):
+    """Running ingest, classify, uri and graph as four CLI invocations,
+    each reading the previous one's output, writes the same graph as
+    ``all``."""
+    all_out = str(tmp_path / "all")
+    assert cli_main(["all", xml_dir, all_out, "--cpus", "8"]) == 0
+
+    src = xml_dir
+    for stage in ("ingest", "classify", "uri", "graph"):
+        out = str(tmp_path / stage)
+        assert cli_main([stage, src, out, "--cpus", "8"]) == 0
+        src = out
+
+    for table in ("nodes", "edges"):
+        got = spark.read.parquet(f"{src}/{table}")
+        exp = spark.read.parquet(f"{all_out}/graph/{table}")
+        assert got.schema == exp.schema
+        assert sorted(got.collect(), key=repr) == sorted(exp.collect(), key=repr)
+
+
 def _fused_graph_from_docs(docs, classifier):
     from oculus_data_pipeline_spark.plans.pipeline import (
         build_document_graph,
-        classify_document_terms,
-        extract_terms,
-        known_entities_from_docs,
+        classify_documents,
     )
 
-    terms = extract_terms(docs)
-    known = known_entities_from_docs(docs)
-    classified = classify_document_terms(terms, known, classifier)
-    return build_document_graph(docs, classified)
+    return build_document_graph(docs, classify_documents(docs, classifier))
 
 
 def test_null_author_json_ingest_parity(spark, tmp_path):
